@@ -81,6 +81,28 @@ class RuleOutcome:
     column_findings: list[tuple[str, str]] = field(default_factory=list)  # (column, message)
 
 
+# ctx keys set by ValidationRun.run: the frames cached for the run (released
+# when it returns), and whether the run materializes its violation evidence
+RUN_CACHES = "_run_caches"
+KEEP_EVIDENCE = "_keep_evidence"
+
+
+def count_evidence(df: DataFrame, ctx: dict) -> tuple[DataFrame, int]:
+    """Count a rule's evidence frame; returns (frame, count).
+
+    When the run keeps its evidence (``ctx[KEEP_EVIDENCE]``), the counting
+    job also caches the rows: the run's evidence union and every later
+    consumer read them instead of re-running the shuffle behind them, and
+    the run releases the cache when it returns. Otherwise it is a plain
+    count, the same jobs and tasks as without evidence.
+    """
+    if not ctx.get(KEEP_EVIDENCE):
+        return df, df.count()
+    cached = df.persist()
+    ctx[RUN_CACHES].append(cached)
+    return cached, cached.count()
+
+
 # ---------------------------------------------------------------- schemas
 
 VIOLATION_SCHEMA = T.StructType(

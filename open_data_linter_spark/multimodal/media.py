@@ -8,7 +8,7 @@ raises NotImplementedError and ``media_features`` extracts byte-level
 features (magic sniff, size, entropy) that are real.
 
 Audio is NOT stubbed: ``audio_features`` decodes through the engine's codec
-layer (wave/audioop) and emits duration/energy/zero-crossing features.
+layer (wave + numpy G.711 tables) and emits duration/energy/zero-crossing features.
 """
 
 from __future__ import annotations

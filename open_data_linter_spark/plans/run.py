@@ -13,7 +13,13 @@ The reference executes each check as its own full scan of the pandas frame
 3. **One fused column-agg job** for all COLUMN-scoped rules + column stats.
 4. Per-rule jobs only for SHUFFLE rules (uniqueness / RI / drift) and the
    PAYLOAD decode pass (which is itself one fused Arrow scan for all
-   payload rules).
+   payload rules). When evidence rows are wanted, the uniqueness and RI
+   rules cache them in the job that counts them
+   (``core.model.count_evidence``).
+5. When evidence rows are wanted, ONE eager ``localCheckpoint`` of the
+   union of every violation source (row extraction, shuffle families,
+   payload rules). Driver cells, ``report.violations`` and every sink read
+   that copy, so no source runs twice and they agree row for row.
 
 The ``bytes`` column is never referenced by (2) or (3), so Parquet column
 pruning keeps the heavy payload out of the cheap path (SURVEY.md §4.2).
@@ -26,17 +32,21 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Any, Optional
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from open_data_linter_spark.core.model import (
     AUDIT_SCHEMA,
+    KEEP_EVIDENCE,
+    RUN_CACHES,
     VIOLATION_SCHEMA,
     InvalidContent,
     LintResult,
     Rule,
     RuleOutcome,
     RuleScope,
+    count_evidence,
 )
 
 BLOCKED_MESSAGE = "チェックできませんでした (blocked: table failed the readability gate)"
@@ -46,8 +56,13 @@ BLOCKED_MESSAGE = "チェックできませんでした (blocked: table failed t
 class RunReport:
     """Materialized outcome of a validation run (small: summaries only).
 
-    ``violations`` stays a lazy DataFrame — write it or collect it; the
-    per-rule matrix only needs counts. ``partition_summary_df`` is the
+    ``violations`` is the run's violation evidence (VIOLATION_SCHEMA), None
+    when there is none. With ``collect_violation_rows=True`` it is the one
+    materialized copy (an eager localCheckpoint of every source's rows):
+    writing or collecting it re-runs no scan, shuffle, join or decode, and
+    it holds exactly the rows behind the attached cells. With
+    ``collect_violation_rows=False`` it is lazy, holds no row-rule rows and
+    re-runs its sources when consumed. ``partition_summary_df`` is the
     per-(rule, column, partition) lineage as a DataFrame (backed by a
     localCheckpoint of the fused-scan output, so re-reading it never
     re-scans the input); ``partition_summaries`` is its collected form,
@@ -80,6 +95,17 @@ def _safe_alias(rule_id: str, column: Optional[str], i: int) -> str:
 
 
 class ValidationRun:
+    """Compiles a ruleset into the run's jobs; see the module docstring.
+
+    ``collect_violation_rows``: build the violation evidence rows (the row
+    extraction scan included) and materialize them once per run into
+    ``RunReport.violations``. Off for at-scale runs that only need verdicts,
+    counts and audit rows.
+    ``max_collected_violations``: cap on the violating cells collected to the
+    driver into the LintResults; 0 collects none (a run that only writes a
+    violation sink). Only applies with ``collect_violation_rows``.
+    """
+
     def __init__(
         self,
         spark: SparkSession,
@@ -97,9 +123,14 @@ class ValidationRun:
     # ------------------------------------------------------------------ row
 
     def _fused_row_scan(
-        self, df: DataFrame, rules: list[Rule]
+        self, df: DataFrame, rules: list[Rule], ctx: dict
     ) -> tuple[dict[str, int], Optional[DataFrame], Optional[DataFrame]]:
         """One conditional-agg pass for counts + one extraction pass.
+
+        The extraction pass runs only when evidence rows are wanted and some
+        count is non-zero; it caches its rows (``count_evidence``) while
+        the other phase-A families run, so the run's evidence union reads
+        them instead of scanning the input again.
 
         Returns (per-rule violation totals, per-partition summary DataFrame
         in long format, violation-row DataFrame). The per-partition summary
@@ -168,7 +199,7 @@ class ValidationRun:
             ]
             arr = F.array(*structs)
             hits = F.filter(arr, lambda s: F.coalesce(s["flag"], F.lit(False)))
-            violations_df = (
+            violations_df, _ = count_evidence(
                 df.select(
                     key.alias("clip_id"),
                     F.spark_partition_id().alias("partition_id"),
@@ -186,7 +217,8 @@ class ValidationRun:
                     F.col("h.column").alias("column"),
                     F.col("h.message").alias("message"),
                     "partition_id",
-                )
+                ),
+                ctx,
             )
         return totals, psum_df, violations_df
 
@@ -219,6 +251,18 @@ class ValidationRun:
     def run(self, df: DataFrame, ctx: dict | None = None) -> RunReport:
         ctx = dict(ctx or {})
         ctx.setdefault("run_id", self.run_id)
+        ctx[RUN_CACHES] = []
+        ctx[KEEP_EVIDENCE] = self.collect_violation_rows
+        try:
+            return self._run(df, ctx)
+        finally:
+            # the decode and shuffle-family caches; the evidence copy (if
+            # any) no longer depends on them, a lazy report.violations
+            # recomputes through them if consumed later
+            for cached in ctx[RUN_CACHES]:
+                cached.unpersist()
+
+    def _run(self, df: DataFrame, ctx: dict) -> RunReport:
         results: dict[str, LintResult] = {}
         metrics: dict[str, dict[str, float]] = {}
         wall: dict[str, float] = {}
@@ -294,7 +338,7 @@ class ValidationRun:
 
         def _run_row_scan() -> None:
             t0 = time.time()
-            totals, psum_df, row_violations = self._fused_row_scan(df, row_rules)
+            totals, psum_df, row_violations = self._fused_row_scan(df, row_rules, ctx)
             row_out.update(totals=totals, psum_df=psum_df, violations=row_violations)
             wall["row_scan"] = time.time() - t0
 
@@ -315,12 +359,8 @@ class ValidationRun:
             for f in futs:
                 f.result()
         _run_payload_family()  # phase B: python workers get the full core budget
-        # canonical key: the whole phase-A+B span (all rule families).
-        # 'shuffle+payload' is a legacy alias for the SAME value — kept so
-        # the 33 raw runs in BENCH/scaling_runs.jsonl (recorded after the
-        # phased-scheduling change, same scope) stay comparable by key.
+        # the whole phase-A+B span (all rule families)
         wall["families_total"] = time.time() - t_all
-        wall["shuffle+payload"] = wall["families_total"]
 
         for r in row_rules:
             total = row_out["totals"].get(r.rule_id, 0)
@@ -351,17 +391,23 @@ class ValidationRun:
             violations = all_violation_dfs[0]
             for v in all_violation_dfs[1:]:
                 violations = violations.unionByName(v)
+            if self.collect_violation_rows:
+                # one job reads every source once (row extraction and
+                # shuffle families from their caches, payload rules from the
+                # decode cache) and pins the rows, partition_id included, for
+                # every consumer; one partition per core, not one per source
+                # partition, so a sink writes a few files, not dozens
+                t0 = time.time()
+                violations = violations.coalesce(
+                    self.spark.sparkContext.defaultParallelism
+                ).localCheckpoint(eager=True)
+                wall["evidence"] = time.time() - t0
 
         report = RunReport(
             self.run_id, results, violations, partition_summaries, metrics,
             wall_secs=wall, partition_summary_df=psum_df,
         )
         self._attach_violation_cells(report)
-        cached = ctx.get("_decode_results")
-        if cached is not None:
-            # release the shared decode cache; report.violations stays valid
-            # (recomputes through the decode pass if re-consumed later)
-            cached.unpersist()
         return report
 
     # -------------------------------------------------------------- helpers
@@ -387,18 +433,21 @@ class ValidationRun:
     def _attach_violation_cells(self, report: RunReport) -> None:
         """Collect violating (clip_id, column) pairs into the LintResults.
 
-        Only for interactive/test use — capped, and skipped entirely when
-        ``collect_violation_rows`` is off (the at-scale path writes the
-        violations DataFrame to the audit table instead).
+        The driver cell collect, for interactive/test use: it reads the
+        run's materialized evidence (``report.violations``), capped at
+        ``max_collected_violations`` rows. Skipped when the run built no
+        evidence rows (``collect_violation_rows`` off) or asks for no cells
+        (``max_collected_violations=0``: a run that writes the evidence to
+        a sink and never reads cells, e.g. streaming micro-batches).
 
         The collected cells MERGE into the existing result: the count pass
         is authoritative for is_valid, so a rule the counts marked passing
-        stays passing even if the (re-evaluated) extraction scan surfaces
-        rows — e.g. a nondeterministic source or a future advisory-row rule
-        must not silently flip pass→fail — and previously attached
-        column_findings are kept.
+        stays passing even if the evidence holds rows for it — e.g. a
+        future advisory-row rule must not silently flip pass→fail — and
+        previously attached column_findings are kept.
         """
-        if report.violations is None or not self.collect_violation_rows:
+        if (report.violations is None or not self.collect_violation_rows
+                or self.max_collected_violations <= 0):
             return
         rows = report.violations.limit(self.max_collected_violations).collect()
         by_rule: dict[str, dict[str, list]] = {}
@@ -443,7 +492,12 @@ class ValidationRun:
                     ts,
                 )
             )
-        metrics_df = self.spark.createDataFrame(rows, AUDIT_SCHEMA)
+        # from pandas: with Arrow on, the rows reach the JVM as one local
+        # relation; a list of tuples becomes a Python RDD, and every write
+        # of it runs a Python task (about 1 s on a 4-vCPU host)
+        metrics_df = self.spark.createDataFrame(
+            pd.DataFrame(rows, columns=AUDIT_SCHEMA.fieldNames()), AUDIT_SCHEMA
+        )
         psum = report.partition_summary_df
         if psum is None:
             return metrics_df

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from open_data_linter_spark.core.model import Rule, RuleOutcome, RuleScope
+from open_data_linter_spark.core.model import RUN_CACHES, Rule, RuleOutcome, RuleScope
 
 SNR_THRESHOLD_DB = 30.0
 DUR_TOLERANCE_MS = 2
@@ -136,9 +136,9 @@ def decode_results(
 def _get_shared_decode(spark: SparkSession, df: DataFrame, ctx: dict) -> DataFrame:
     res = ctx.get("_decode_results")
     if res is None:
-        res = decode_results(df, ctx.get("reference_clips"))
-        res = res.persist()
+        res = decode_results(df, ctx.get("reference_clips")).persist()
         ctx["_decode_results"] = res
+        ctx.setdefault(RUN_CACHES, []).append(res)
     return res
 
 

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from open_data_linter_spark.core.model import Rule, RuleOutcome, RuleScope
+from open_data_linter_spark.core.model import Rule, RuleOutcome, RuleScope, count_evidence
 
 
 def anti_members(
@@ -50,14 +50,18 @@ def make_ri_rule(
             # "could not check" — reference's is_valid=None channel
             return RuleOutcome(rule_id, is_valid=None, metrics={})
         missing = anti_members(df, dim, fact_col, dim_col, broadcast=broadcast)
-        violations = missing.select(
-            F.lit(rule_id).alias("rule_id"),
-            (F.col(key_col) if key_col in df.columns else F.lit(None)).cast("string").alias("clip_id"),
-            F.lit(fact_col).alias("column"),
-            F.lit(message).alias("message"),
-            F.spark_partition_id().alias("partition_id"),
+        # cached by the counting job when the run keeps its evidence,
+        # partition_id included, so every consumer sees the same rows
+        violations, n = count_evidence(
+            missing.select(
+                F.lit(rule_id).alias("rule_id"),
+                (F.col(key_col) if key_col in df.columns else F.lit(None)).cast("string").alias("clip_id"),
+                F.lit(fact_col).alias("column"),
+                F.lit(message).alias("message"),
+                F.spark_partition_id().alias("partition_id"),
+            ),
+            ctx,
         )
-        n = violations.count()
         return RuleOutcome(
             rule_id,
             is_valid=n == 0,

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from open_data_linter_spark.core.model import Rule, RuleOutcome, RuleScope
+from open_data_linter_spark.core.model import Rule, RuleOutcome, RuleScope, count_evidence
 
 
 def duplicate_keys(df: DataFrame, key: str = "clip_id", salted: bool = False) -> DataFrame:
@@ -51,22 +51,22 @@ def make_uniqueness_rule(key: str = "clip_id", rule_id: str = "uniq") -> Rule:
     message = f"duplicate {key}"
 
     def runner(spark: SparkSession, df: DataFrame, ctx: dict) -> RuleOutcome:
-        dups = duplicate_keys(df, key)
-        # tiny result at sane dup rates; count() triggers the aggregation
-        n_dup_keys = dups.count()
-        violations = None
-        if n_dup_keys > 0:
-            violations = dups.select(
+        # one row per duplicated key, tiny at sane dup rates; cached by the
+        # counting job when the run keeps its evidence
+        violations, n_dup_keys = count_evidence(
+            duplicate_keys(df, key).select(
                 F.lit(rule_id).alias("rule_id"),
                 F.col(key).alias("clip_id"),
                 F.lit(key).alias("column"),
                 F.concat(F.lit(message + " x"), F.col("dup_count")).alias("message"),
                 F.lit(None).cast("int").alias("partition_id"),
-            )
+            ),
+            ctx,
+        )
         return RuleOutcome(
             rule_id,
             is_valid=n_dup_keys == 0,
-            violations=violations,
+            violations=violations if n_dup_keys else None,
             metrics={"duplicate_key_count": float(n_dup_keys)},
         )
 

@@ -9,7 +9,12 @@ dim-table anti-joins (rule 1-12 analog) never degrade to sort-merge.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
+import zipfile
 
 from pyspark.sql import SparkSession
 
@@ -75,32 +80,47 @@ def get_spark(
     return spark
 
 
+_PKG_ZIP = "open_data_linter_spark_pkg.zip"
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Make the engine importable on executors regardless of launch cwd.
 
     Equivalent of ``spark-submit --py-files odl_spark.zip`` (the north rule's
     deployment mode): zip the package and addPyFile it, so Python workers on
-    any executor can unpickle our pandas-UDF closures.
+    any executor can unpickle our pandas-UDF closures. Shipped once per
+    SparkContext: every zip on the workers' path is one more importer that
+    each Python task re-scans, so a second ``get_spark`` on a live context
+    adds nothing.
     """
-    import tempfile
-    import zipfile
-
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(tempfile.gettempdir(), "open_data_linter_spark_pkg.zip")
+    sc = spark.sparkContext
+    if _PKG_ZIP in sc._python_includes:
+        return
     try:
-        with zipfile.ZipFile(zpath, "w", zipfile.ZIP_STORED) as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                if "__pycache__" in root:
-                    continue
-                for fn in files:
-                    if fn.endswith(".py"):
-                        full = os.path.join(root, fn)
-                        rel = os.path.join(
-                            "open_data_linter_spark", os.path.relpath(full, pkg_dir)
-                        )
-                        zf.write(full, rel)
-        spark.sparkContext.addPyFile(zpath)
-    except Exception:
-        # already-added in this context, or a read-only tmp — not fatal when
-        # the package is importable from the workers' cwd anyway
+        sc.addPyFile(_package_zip())
+    except OSError:
+        # a read-only tmp — not fatal when the package is importable from
+        # the workers' cwd anyway
         pass
+
+
+@functools.cache
+def _package_zip() -> str:
+    """Zip the package once per process, into a directory of its own: two
+    processes starting sessions at once never write the same file."""
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    zdir = tempfile.mkdtemp(prefix="odl_spark_pkg-")
+    atexit.register(shutil.rmtree, zdir, True)
+    zpath = os.path.join(zdir, _PKG_ZIP)
+    with zipfile.ZipFile(zpath, "w", zipfile.ZIP_STORED) as zf:
+        for root, _dirs, files in os.walk(pkg_dir):
+            if "__pycache__" in root:
+                continue
+            for fn in files:
+                if fn.endswith(".py"):
+                    full = os.path.join(root, fn)
+                    rel = os.path.join(
+                        "open_data_linter_spark", os.path.relpath(full, pkg_dir)
+                    )
+                    zf.write(full, rel)
+    return zpath

@@ -123,7 +123,9 @@ def main() -> int:
         spark.stop()
         return 0
 
-    run = ValidationRun(spark, rules, collect_violation_rows=True)
+    # evidence rows go to the sink; the summary never reads driver cells
+    run = ValidationRun(spark, rules, collect_violation_rows=True,
+                        max_collected_violations=0)
     report = run.run(clips, ctx)
     if report.violations is not None:
         from open_data_linter_spark.plans.run import sample_violations

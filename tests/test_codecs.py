@@ -1,5 +1,7 @@
 """Codec layer unit tests (no Spark)."""
 
+import warnings
+
 import numpy as np
 import pytest
 
@@ -34,6 +36,23 @@ def test_roundtrip(codec):
     else:
         # G.711 is lossy but must stay comfortably above the 30 dB gate
         assert snr_db(pcm_to_float32(pcm), pcm_to_float32(decoded)) > 30.0
+
+
+def test_g711_tables_match_audioop():
+    """The lookup-table G.711 coder equals the stdlib one on every code and
+    every int16 sample (for as long as ``audioop`` still imports)."""
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", DeprecationWarning)
+        audioop = pytest.importorskip("audioop")
+    codes = bytes(range(256))
+    samples = np.arange(-32768, 32768).astype(np.int16)
+    for codec, lin2g, g2lin in (("ulaw", audioop.lin2ulaw, audioop.ulaw2lin),
+                                ("alaw", audioop.lin2alaw, audioop.alaw2lin)):
+        payload = encode_clip(samples, 8000, codec)[12:]
+        assert payload == lin2g(samples.tobytes(), 2), codec
+        container = encode_clip(np.zeros(256, np.int16), 8000, codec)[:12]
+        _, _, decoded = decode_clip(container + codes)
+        assert decoded.tobytes() == g2lin(codes, 2), codec
 
 
 def test_decode_rejects_garbage():

@@ -2,6 +2,8 @@
 seeded-violation batch yields the exact expected (clip_id, column) set —
 the reference's golden-cell-set test pattern (tests/test_csv_linter.py)."""
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -187,3 +189,77 @@ def test_violations_dataframe_shape(spark):
     assert v[0].partition_id is not None
     if ctx.get("_decode_results") is not None:
         ctx["_decode_results"].unpersist()
+
+
+# one run over every evidence source: the row extraction scan (1-7, 1-1-sql),
+# the uniqueness shuffle, both RI anti-joins and the payload decode, with
+# malformed clips among them (1: bad magic, 6: header truncated to 3 bytes)
+EVIDENCE_CORRUPT = {1: "1-1", 3: "1-7", 6: "1-1", 10: "uniq", 12: "1-11",
+                    20: "1-12", 30: "payload_snr", 40: "1-1", 45: "1-11"}
+EVIDENCE_GOLDEN = {
+    ("1-1", clip_id_for(1), "bytes"), ("payload-ref", clip_id_for(1), "bytes"),
+    ("1-7", clip_id_for(3), "transcript"), ("payload-ref", clip_id_for(3), "transcript"),
+    ("1-1", clip_id_for(6), "bytes"), ("payload-ref", clip_id_for(6), "bytes"),
+    # index 10 carries clip 9's id and its own audio and transcript
+    ("uniq", clip_id_for(9), "clip_id"), ("payload-ref", clip_id_for(9), "bytes"),
+    ("payload-ref", clip_id_for(9), "transcript"),
+    ("1-11", clip_id_for(12), "dur_ms"),
+    ("1-12-manifest", clip_id_for(20), "clip_id"),
+    ("payload-ref", clip_id_for(30), "bytes"),
+    # codec column 'mp3' over a RIFF payload
+    ("1-1-sql", clip_id_for(40), "codec"), ("1-12-codec", clip_id_for(40), "codec"),
+    ("1-1", clip_id_for(40), "bytes"),
+    ("1-11", clip_id_for(45), "sr_hz"),
+}
+# metric holding each non-row rule's violation count
+COUNT_METRIC = {
+    "uniq": "duplicate_key_count", "1-12-codec": "ri_violation_count",
+    "1-12-manifest": "ri_violation_count", "1-1": "undecodable_count",
+    "1-11": "metadata_mismatch_count", "payload-ref": "fidelity_violation_count",
+}
+
+
+def test_evidence_materialized_once(spark):
+    """Cells, per-rule counts and report.violations agree row for row, match
+    the golden set, and report.violations is a materialized copy: reading it
+    runs no shuffle, join or decode."""
+    report = run_fixture(spark, corrupt=EVIDENCE_CORRUPT)
+    rows = report.violations.collect()
+    evidence = Counter((r.rule_id, r.clip_id, r.column) for r in rows)
+    cells = Counter(
+        (rid, cid, col)
+        for rid, res in report.results.items()
+        for ic in res.invalid_contents
+        for cid, col in ic.invalid_cells
+        if cid is not None  # column-level findings carry no clip
+    )
+    assert cells == evidence
+    assert set(evidence) == EVIDENCE_GOLDEN and max(evidence.values()) == 1
+
+    per_rule = Counter(rid for rid, _, _ in evidence.elements())
+    counts = {
+        rid: int(m[COUNT_METRIC.get(rid, "violation_count")])
+        for rid, m in report.metrics.items()
+        if rid in COUNT_METRIC or "violation_count" in m
+    }
+    assert counts == {rid: per_rule[rid] for rid in counts}
+    assert set(per_rule) <= set(counts)
+
+    # a second read (a sink) sees the same rows, partition_id included
+    assert sorted(map(tuple, report.violations.collect()), key=repr) == sorted(
+        map(tuple, rows), key=repr)
+    plan = report.violations._jdf.queryExecution().executedPlan().toString()
+    for node in ("Exchange", "Join", "MapInPandas"):
+        assert node not in plan, plan
+
+
+def test_sink_only_run_collects_no_cells(spark):
+    """max_collected_violations=0 (the streaming sink path): evidence rows
+    are built, but no cells reach the driver."""
+    clips, ctx = make_fixture(spark, n=40, num_partitions=4, corrupt={3: "1-7"})
+    rules = build_audio_ruleset(with_payload=False, with_shuffle=False)
+    report = ValidationRun(spark, rules, max_collected_violations=0).run(clips, ctx)
+    assert [(r.rule_id, r.clip_id) for r in report.violations.collect()] == [
+        ("1-7", clip_id_for(3))]
+    assert report.results["1-7"].is_valid is False
+    assert not any(ic.invalid_cells for ic in report.results["1-7"].invalid_contents)
