@@ -194,54 +194,6 @@ def profile_columns(
     return out
 
 
-def profile_exact_long(df: DataFrame, columns: list[str]) -> DataFrame:
-    """The SQL-exact half of column profiling as a long-format DataFrame:
-    (column_name, nulls, null_rate, distinct_count, min_value, max_value).
-
-    One fused aggregation job (same single-pass shape as profile_columns)
-    followed by a driver-free ``stack`` unpivot — no collect, so the result
-    composes with further Spark ops and is DuckDB-oracle-checkable
-    (count_distinct here is exact; the HLL estimate stays in
-    profile_columns, which is rows-only by nature).
-    """
-    aggs: list[Column] = [F.count(F.lit(1)).alias("__rows")]
-    for c in columns:
-        aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__nulls"))
-        aggs.append(F.count_distinct(F.col(c)).alias(f"{c}__distinct"))
-        aggs.append(F.min(F.col(c)).cast("string").alias(f"{c}__min"))
-        aggs.append(F.max(F.col(c)).cast("string").alias(f"{c}__max"))
-    one = df.agg(*aggs)
-    def _q(c: str) -> str:  # escape for the SQL string literal
-        return "'" + c.replace("'", "''") + "'"
-
-    def _bq(c: str, suffix: str) -> str:  # escape for a backtick identifier
-        return "`" + c.replace("`", "``") + suffix + "`"
-
-    stack_args = ", ".join(
-        f"{_q(c)}, {_bq(c, '__nulls')}, {_bq(c, '__distinct')}, "
-        f"{_bq(c, '__min')}, {_bq(c, '__max')}"
-        for c in columns
-    )
-    return (
-        one.select(
-            F.expr(
-                f"stack({len(columns)}, {stack_args}) AS "
-                "(column_name, nulls, distinct_count, min_value, max_value)"
-            ),
-            F.col("__rows"),
-        )
-        .select(
-            "column_name",
-            "nulls",
-            F.round(F.col("nulls") / F.col("__rows"), 6).alias("null_rate"),
-            "distinct_count",
-            "min_value",
-            "max_value",
-        )
-        .orderBy("column_name")
-    )
-
-
 def _vote(
     counts: dict[str, int], rows: int, empties: int, dominance_rate: float
 ) -> ColumnType:

@@ -224,28 +224,6 @@ def suggest_constraints(
     return suite
 
 
-def suite_as_df(spark, suite: Sequence[Mapping[str, Any]]) -> DataFrame:
-    """A suite rendered as a typed DataFrame (one row per constraint) —
-    sinkable beside the data, and the driver-oracle surface for the
-    suggestion logic."""
-    rows = [
-        (
-            spec.get("id"),
-            spec["kind"],
-            spec.get("column"),
-            float(spec["min"]) if spec.get("min") is not None else None,
-            float(spec["max"]) if spec.get("max") is not None else None,
-            [str(v) for v in spec["values"]] if "values" in spec else None,
-        )
-        for spec in suite
-    ]
-    return spark.createDataFrame(
-        rows,
-        "constraint_id string, kind string, column string,"
-        " lo double, hi double, domain array<string>",
-    )
-
-
 def check_group_counts(
     df: DataFrame,
     group_col: str,

@@ -26,8 +26,9 @@ Design for 10^12 rows:
   side's row hashes — order/partition independent AND multiplicity
   sensitive (xor alone would cancel even multiplicities).
 
-The md5 construction is exactly replayable in DuckDB (same trick as
-sources/shards.py), so reconciliation reports carry FULL SQL twins.
+The md5 construction (``conv(substr(md5(x), 1, 15), 16, 10)``, a
+non-negative 60-bit integer) is exactly replayable in other SQL engines,
+so a reconciliation report can be checked by an independent SQL twin.
 
 Reference seed: the reference re-lints a corrected file from scratch
 and diffs verdicts by eye; this is that workflow made incremental and

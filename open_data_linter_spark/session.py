@@ -44,13 +44,10 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # NOTE: coalescePartitions.minPartitionSize stays at the 1MB
-        # default. Lowering it to 16kb session-wide widens every
-        # heavy-compute-on-small-rows stage (span_removal 3.6s -> 1.9s at
-        # sf0.1) but costs the validation matrix ~19% in tiny-task
-        # scheduling overhead across its concurrent families — operators
-        # that hit the 1-task funnel pin their own boundary with an
-        # explicit fixed-count repartition instead (dedup/embedding.py,
-        # dedup/spans.py pattern).
+        # default. Lowering it to 16kb session-wide cost the validation
+        # matrix ~19% in tiny-task scheduling overhead across its
+        # concurrent families; a stage that needs more tasks than AQE
+        # leaves it pins its own width with an explicit repartition.
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # audio payloads are large: cap Arrow batches so decode UDFs never
@@ -65,11 +62,6 @@ def get_spark(
         # core-count-independent cost otherwise (BENCH/BASELINE.md floor)
         .config("spark.python.worker.reuse", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        # declared results are materialized to the driver by the bench
-        # contract; the largest (fuzzy_link_parts, ~48M rows at sf1.0)
-        # sits near the 1g default task-result cap — headroom, not a
-        # behavior change (the same rows were always collected)
-        .config("spark.driver.maxResultSize", "8g")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

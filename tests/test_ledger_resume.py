@@ -60,8 +60,12 @@ def test_reprocessing_is_idempotent(spark, workdir):
     # simulate a crash AFTER audit write but BEFORE ledger mark: re-run pt=0
     part = df.where(F.col("pt") == 0)
     audit = _process(part, 0).withColumn("run_id", F.lit("rA")).withColumn("pt", F.lit(0))
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    audit.write.mode("overwrite").partitionBy("run_id", "pt").parquet(f"{workdir}/audit")
+    (
+        audit.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("run_id", "pt")
+        .parquet(f"{workdir}/audit")
+    )
 
     after = sorted(map(tuple, r1.audit().drop("run_id").collect()))
     assert before == after  # dynamic overwrite replaced the slice exactly
@@ -118,6 +122,35 @@ def test_resumable_full_validation(spark, workdir):
     assert resumable_validation(
         spark, df, rules, f"{workdir}/ledger", f"{workdir}/audit", "rv1", ctx=ctx
     ) == []
+
+
+def test_resumable_run_leaves_session_conf_alone(spark, workdir):
+    """The audit write asks for dynamic partition overwrite per write: the
+    session's partitionOverwriteMode reads the same before and after a
+    resumable run, and under a static session every pt's slice survives."""
+    from open_data_linter_spark.plans.ledger import resumable_validation
+    from open_data_linter_spark.rules.audio_rules import build_audio_ruleset
+    from open_data_linter_spark.sources.fixtures import make_fixture
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        clips, ctx = make_fixture(spark, n=24, num_partitions=2)
+        df = clips.withColumn(
+            "pt", F.pmod(F.xxhash64("clip_id"), F.lit(2)).cast("int")
+        )
+        before = spark.conf.get(key)
+        done = resumable_validation(
+            spark, df, build_audio_ruleset(with_payload=False),
+            f"{workdir}/ledger", f"{workdir}/audit", "rc1", ctx=ctx,
+        )
+        assert spark.conf.get(key) == before
+        assert done == [0, 1]
+        audit = spark.read.parquet(f"{workdir}/audit")
+        assert sorted(r.pt for r in audit.select("pt").distinct().collect()) == [0, 1]
+    finally:
+        spark.conf.set(key, prior)
 
 
 def test_iceberg_sink_capability_gate(spark):
