@@ -106,9 +106,8 @@ def audio_hashed_keys(
     melody_q: int = 3,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """(id, hs, ck) per decodable clip: the fingerprint stage shared by the
-    self-join path below and the incremental index
-    (dedup/incremental_audio.py). ``hs`` = distinct q-gram shingle hashes
+    """(id, hs, ck) per decodable clip: the fingerprint stage of the
+    self-join path below. ``hs`` = distinct q-gram shingle hashes
     of the dominant-band sequence (the VERIFY sets), ``ck`` = melody-gram
     candidate keys (see audio_near_duplicates for why candidates come
     from the run-length-collapsed melody). Output is repartitioned to

@@ -42,10 +42,8 @@ def hyperplane_band_rows(
     """(id, band, bucket) banded hyperplane-LSH rows over a (id, v) frame.
 
     The plane family is a pure function of (seed, dim, bands,
-    rows_per_band), so band rows computed in different sessions — or
-    loaded from a persisted index (dedup/incremental_embedding.py) —
-    collide identically. Shared by the self-join path below and the
-    incremental index path."""
+    rows_per_band), so band rows computed in different sessions collide
+    identically."""
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((bands * rows_per_band, dim))
     planes /= np.linalg.norm(planes, axis=1, keepdims=True)

@@ -172,9 +172,7 @@ def band_rows(sig_df: DataFrame, n_perm: int, bands: int) -> DataFrame:
 
     One xxhash64 over each band's ``rows_per_band`` signature slots; the
     output carries ONLY the 3 narrow columns so the downstream bucket
-    join / index lookup never shuffles the signature arrays. Shared by
-    the self-join path below and the incremental index path
-    (dedup/incremental.py)."""
+    join never shuffles the signature arrays."""
     rows_per_band = n_perm // bands
     return sig_df.select(
         "id",

@@ -25,15 +25,10 @@ oracle then becomes a contract check, not an exact twin); pass
 
 from __future__ import annotations
 
-from threading import Lock
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Java's ``\s`` written out: it is ASCII-only, while Python's ``\s`` is
-# Unicode-wide, so the explicit class keeps executor regex and Python twins
-# splitting on the same characters
-WS_CLASS = r"[ \t\n\x0B\f\r]"
+from open_data_linter_spark.functions.text import WS_CLASS
 
 MODIFIED_Z = 0.6745  # Φ^-1(0.75): scales MAD to σ for the modified z-score
 
@@ -41,30 +36,6 @@ MODIFIED_Z = 0.6745  # Φ^-1(0.75): scales MAD to σ for the modified z-score
 # exact path gathers n/2 values into one task, so the bound is what one
 # task comfortably holds (500k doubles ≈ 4 MB), not executor memory
 EXACT_MEDIAN_MAX_ROWS = 1_000_000
-
-
-_LIVE: dict[str, DataFrame] = {}
-_LOCK = Lock()
-
-
-def persist_scoped(scope: str, df: DataFrame) -> DataFrame:
-    """persist() ``df``, evicting the previous generation of ``scope``.
-
-    The returned plan is lazy and the caller never holds a handle to the
-    cache, so a bare persist() would accumulate in a long-lived session
-    (the CacheManager keeps strong references). One generation per scope
-    bounds that; unpersisting a cache an in-flight query still reads is
-    safe in Spark (the plan recomputes)."""
-    with _LOCK:
-        old = _LIVE.get(scope)
-        if old is not None:
-            try:
-                old.unpersist(blocking=False)
-            except Exception:
-                pass  # session may be gone; eviction is best-effort
-        out = df.persist()
-        _LIVE[scope] = out
-    return out
 
 
 def _lower_median(df: DataFrame, col: str, n: int | None = None) -> float:
@@ -82,7 +53,7 @@ def _lower_median(df: DataFrame, col: str, n: int | None = None) -> float:
 
 def word_count(transcript_col="transcript") -> F.Column:
     """Token count under the package tokenize contract (Java ``\\s+``
-    split with EMPTY TOKENS DROPPED).
+    split with EMPTY TOKENS DROPPED — functions/text.java_ws_tokens twin).
     ``array_remove(..., '')`` is what drops the empties a leading/trailing
     non-space whitespace edge produces (F.trim strips ASCII spaces only)."""
     return F.size(
@@ -142,6 +113,8 @@ def robust_z_outliers(
         # the exact path reads vals 4x (count, two TakeOrdered medians,
         # the final outlier scan) — pin it so upstream lineage (a full
         # scan, or a mapInPandas synthesis in the fixtures) runs once
+        from open_data_linter_spark.dedup._cache import persist_scoped
+
         vals = persist_scoped("rate.vals", vals)
         if n is None:  # forced-exact: no auto probe ran
             n = vals.count()
