@@ -28,7 +28,6 @@ import pandas as pd
 from open_data_linter_spark.audio.codecs import (
     decode_clip,
     encode_clip,
-    pcm_to_float32,
 )
 
 SR_CHOICES = np.array([8000, 16000, 22050, 44100])
@@ -309,265 +308,4 @@ def codec_registry_pdf() -> pd.DataFrame:
             {"codec": c, "container_magic": m, "sample_width": 2 if c == "pcm_s16le" else 1}
             for c, m in CODEC_MAGIC.items()
         ]
-    )
-
-
-# ------------------------------------------- tone-sequence near-dup fixture
-
-# variant transformations a real pipeline's duplicates exhibit: codec
-# re-encode, gain change, low-level noise (SNR 35 dB — above the 30 dB
-# "same recording" bar in BASELINE.json:15), and truncation
-TONE_VARIANTS = ("codec", "gain", "noise", "trunc")
-TONE_SEG_S = 0.25  # tone segment length (seconds)
-TONE_BLOCK = 8  # in every block of 8 ids, the last 2 are near-dup variants
-
-
-def tone_group_of(i: int, block: int = TONE_BLOCK) -> int:
-    """Planted-duplicate layout: group id (= base clip index) for clip i.
-
-    In every block of ``block`` consecutive indices, the last two indices
-    are near-duplicate variants of the block's FIRST index; every other
-    index is its own singleton group. Pure f(i), so distributed synthesis
-    slices and the committed metadata twin agree by construction."""
-    r = i % block
-    return i - r if r >= block - 2 else i
-
-
-def tone_variant_of(i: int, seed: int = 7) -> str:
-    """Variant tag for clip i ('base' for group leaders), pure f(i)."""
-    if tone_group_of(i) == i:
-        return "base"
-    rng = np.random.default_rng((seed, i, 77))
-    return str(TONE_VARIANTS[int(rng.integers(0, len(TONE_VARIANTS)))])
-
-
-def _gen_tone_base(base: int, seed: int, dur_range_s: tuple[float, float]):
-    """Seeded non-stationary melody for group ``base``: a sequence of
-    mid-band tones (audio/bands.py TONE_GRID) with 5 ms fade ramps so
-    segment boundaries don't ring broadband clicks into the analysis
-    frames. Returns (float signal in [-1, 1], sr, transcript, codec)."""
-    from open_data_linter_spark.audio.bands import TONE_GRID
-
-    rng = np.random.default_rng((seed, base))
-    sr = int(rng.choice(SR_CHOICES, p=SR_PROBS))
-    dur_s = float(rng.uniform(*dur_range_s))
-    n_seg = max(3, int(round(dur_s / TONE_SEG_S)))
-    seg_n = int(round(sr * TONE_SEG_S))
-    fade = max(1, int(round(sr * 0.005)))
-    ramp = np.ones(seg_n)
-    ramp[:fade] = np.linspace(0.0, 1.0, fade)
-    ramp[-fade:] = np.linspace(1.0, 0.0, fade)
-    segs = []
-    for _ in range(n_seg):
-        f0 = float(TONE_GRID[int(rng.integers(2, len(TONE_GRID)))])
-        amp = float(rng.uniform(0.35, 0.5))
-        t = np.arange(seg_n, dtype=np.float64) / sr
-        segs.append(amp * np.sin(2 * np.pi * f0 * t) * ramp)
-    x = np.concatenate(segs)
-    n_words = int(rng.integers(3, 13))
-    transcript = " ".join(rng.choice(_VOCAB, size=n_words))
-    codec = str(rng.choice(CODEC_CHOICES, p=CODEC_PROBS))
-    return x, sr, transcript, codec
-
-
-def gen_tone_clips_pdf(
-    indices: np.ndarray,
-    seed: int = 7,
-    dur_range_s: tuple[float, float] = (0.8, 2.4),
-) -> pd.DataFrame:
-    """Clips-table slice of the tone-sequence near-dup fixture.
-
-    Every clip regenerates bit-identically from its index alone: variants
-    re-derive the base melody from the GROUP seed, then apply their seeded
-    perturbation — so the planted ground truth (tests/data metadata twin,
-    scripts/gen_fixture_parquet.py) never has to ship audio bytes."""
-    rows = []
-    for i in map(int, indices):
-        base = tone_group_of(i)
-        x, sr, transcript, codec = _gen_tone_base(base, seed, dur_range_s)
-        variant = tone_variant_of(i, seed)
-        if variant == "codec":
-            # re-encode under a DIFFERENT container than the base used
-            codec = "ulaw" if codec != "ulaw" else "alaw"
-        elif variant == "gain":
-            x = x * 0.85
-        elif variant == "noise":
-            vrng = np.random.default_rng((seed, i, 99))
-            snr_lin = 10.0 ** (35.0 / 10.0)  # SNR 35 dB
-            x = x + vrng.standard_normal(x.shape) * np.sqrt(
-                np.mean(x**2) / snr_lin
-            )
-        elif variant == "trunc":
-            x = x[: int(len(x) * 0.75)]
-        pcm = np.clip(x * 32767.0, -32768, 32767).astype(np.int16)
-        rows.append(
-            {
-                "clip_id": clip_id_for(i),
-                "bytes": encode_clip(pcm, sr, codec),
-                "sr_hz": sr,
-                "dur_ms": int(round(len(pcm) / sr * 1000.0)),
-                "codec": codec,
-                "transcript": transcript,
-            }
-        )
-    pdf = pd.DataFrame(
-        rows, columns=["clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"]
-    )
-    pdf["sr_hz"] = pdf["sr_hz"].astype("Int32")
-    pdf["dur_ms"] = pdf["dur_ms"].astype("Int32")
-    return pdf
-
-
-# ------------------------------------------ gapped-utterance VAD fixture
-
-_GAP_SEED = 13
-
-
-def _gapped_layout(i: int, seed: int = _GAP_SEED):
-    """Planted layout for gapped clip ``i``: (sr, lead_n, [(start, n,
-    f0, amp), ...], total_n). Pure f(i), shared by the clips generator
-    and the ground-truth twin so the truth never depends on the decoder
-    or the segmentation operator. Constraints that make the planted
-    spans EXACTLY recoverable by segment_on_silence's defaults
-    (-40 dBFS, 150 ms gap, 100 ms min segment): bursts are 150-400 ms
-    (>= min segment), inter-burst gaps 200-450 ms of digital silence
-    (>= min gap; A-law's no-true-zero decode of 0 is ~8/32768, far
-    under the -40 dB level), burst amplitude 0.35-0.5 (far above it),
-    and the first/last burst samples are pinned to full amplitude so
-    span edges are loud by construction (a sine's phase-0 edge would
-    start below threshold). Interior |cos| dips under the level last
-    ~2 samples per zero crossing — orders of magnitude under min gap.
-    """
-    rng = np.random.default_rng((seed, i, 13))
-    sr = int(rng.choice(SR_CHOICES, p=SR_PROBS))
-    n_seg = 0 if i % 17 == 0 else int(rng.integers(1, 5))
-    lead_n = int(round(sr * int(rng.integers(40, 301)) / 1000.0))
-    trail_n = int(round(sr * int(rng.integers(40, 301)) / 1000.0))
-    pos = lead_n
-    spans = []
-    for k in range(n_seg):
-        burst_n = int(round(sr * int(rng.integers(150, 401)) / 1000.0))
-        f0 = float(rng.uniform(200.0, min(2000.0, sr / 4.0)))
-        amp = float(rng.uniform(0.35, 0.5))
-        spans.append((pos, burst_n, f0, amp))
-        pos += burst_n
-        if k < n_seg - 1:
-            pos += int(round(sr * int(rng.integers(200, 451)) / 1000.0))
-    total_n = pos + trail_n
-    return sr, lead_n, spans, total_n
-
-
-def gen_gapped_clips_pdf(indices: np.ndarray, seed: int = _GAP_SEED) -> pd.DataFrame:
-    """Clips-table slice of the gapped-utterance fixture: seeded tone
-    bursts separated by true digital silence, every boundary planted."""
-    rows = []
-    for i in map(int, indices):
-        sr, _, spans, total_n = _gapped_layout(i, seed)
-        x = np.zeros(total_n, dtype=np.float64)
-        for start, n, f0, amp in spans:
-            t = np.arange(n, dtype=np.float64) / sr
-            burst = amp * np.cos(2 * np.pi * f0 * t)
-            burst[0] = amp
-            burst[-1] = amp  # pin span edges above the loudness level
-            x[start:start + n] = burst
-        pcm = np.clip(x * 32767.0, -32768, 32767).astype(np.int16)
-        rng = np.random.default_rng((seed, i, 21))
-        codec = str(rng.choice(CODEC_CHOICES, p=CODEC_PROBS))
-        transcript = " ".join(rng.choice(_VOCAB, size=int(rng.integers(3, 13))))
-        rows.append(
-            {
-                "clip_id": clip_id_for(i),
-                "bytes": encode_clip(pcm, sr, codec),
-                "sr_hz": sr,
-                "dur_ms": int(round(total_n / sr * 1000.0)),
-                "codec": codec,
-                "transcript": transcript,
-            }
-        )
-    pdf = pd.DataFrame(
-        rows, columns=["clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"]
-    )
-    pdf["sr_hz"] = pdf["sr_hz"].astype("Int32")
-    pdf["dur_ms"] = pdf["dur_ms"].astype("Int32")
-    return pdf
-
-
-def gen_gapped_truth_pdf(indices: np.ndarray, seed: int = _GAP_SEED) -> pd.DataFrame:
-    """Ground-truth twin: one row per planted utterance span."""
-    rows = []
-    for i in map(int, indices):
-        sr, _, spans, _ = _gapped_layout(i, seed)
-        for k, (start, n, _, _) in enumerate(spans):
-            rows.append(
-                {
-                    "clip_id": clip_id_for(i),
-                    "seg_idx": k,
-                    "sr_hz": sr,
-                    "start_sample": start,
-                    "seg_samples": n,
-                }
-            )
-    return pd.DataFrame(
-        rows, columns=["clip_id", "seg_idx", "sr_hz", "start_sample", "seg_samples"]
-    )
-
-
-def synthesize_gapped_clips(spark, n: int, num_partitions: int = 16, seed: int = _GAP_SEED):
-    """Distributed gapped-fixture synthesis (same shape as synthesize_clips)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("clip_id", T.StringType()),
-            T.StructField("bytes", T.BinaryType()),
-            T.StructField("sr_hz", T.IntegerType()),
-            T.StructField("dur_ms", T.IntegerType()),
-            T.StructField("codec", T.StringType()),
-            T.StructField("transcript", T.StringType()),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            yield gen_gapped_clips_pdf(b["id"].to_numpy(), seed)
-
-    return spark.range(0, n, numPartitions=num_partitions).mapInPandas(
-        gen, schema=schema
-    )
-
-
-def gen_tone_groups_pdf(indices: np.ndarray, seed: int = 7) -> pd.DataFrame:
-    """Ground-truth metadata twin: (clip_id, group_id, variant) per clip."""
-    rows = [
-        {
-            "clip_id": clip_id_for(i),
-            "group_id": clip_id_for(tone_group_of(i)),
-            "variant": tone_variant_of(i, seed),
-        }
-        for i in map(int, indices)
-    ]
-    return pd.DataFrame(rows, columns=["clip_id", "group_id", "variant"])
-
-
-def synthesize_tone_clips(spark, n: int, num_partitions: int = 16, seed: int = 7):
-    """Distributed tone-fixture synthesis (same shape as synthesize_clips)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("clip_id", T.StringType()),
-            T.StructField("bytes", T.BinaryType()),
-            T.StructField("sr_hz", T.IntegerType()),
-            T.StructField("dur_ms", T.IntegerType()),
-            T.StructField("codec", T.StringType()),
-            T.StructField("transcript", T.StringType()),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            yield gen_tone_clips_pdf(b["id"].to_numpy(), seed)
-
-    return spark.range(0, n, numPartitions=num_partitions).mapInPandas(
-        gen, schema=schema
     )

@@ -4,6 +4,5 @@ from open_data_linter_spark.core.model import (  # noqa: F401
     LintResult,
     InvalidContent,
     VIOLATION_SCHEMA,
-    SUMMARY_SCHEMA,
     AUDIT_SCHEMA,
 )

@@ -115,16 +115,6 @@ VIOLATION_SCHEMA = T.StructType(
     ]
 )
 
-SUMMARY_SCHEMA = T.StructType(
-    [
-        T.StructField("rule_id", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), True),  # NULL => global
-        T.StructField("pass", T.BooleanType(), True),          # NULL => blocked
-        T.StructField("violation_count", T.LongType(), True),
-        T.StructField("rows_scanned", T.LongType(), True),
-    ]
-)
-
 AUDIT_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),

@@ -1,11 +1,11 @@
 """Token-distribution divergence between two corpora (KL / Jensen-Shannon).
 
-Corpus-level drift for TEXT: where rules/drift.py and
-functions/drift_psi.py compare numeric histograms, this compares the
-unigram token distributions of two corpora — the standard check before
-mixing a new crawl snapshot into a training set, or for monitoring a
-source's topical drift between dumps (cf. the distribution-shift
-analyses in Gao et al., The Pile, arXiv 2101.00027 §5).
+Corpus-level drift for TEXT: where rules/drift.py compares numeric
+histograms, this compares the unigram token distributions of two
+corpora — the standard check before mixing a new crawl snapshot into a
+training set, or for monitoring a source's topical drift between dumps
+(cf. the distribution-shift analyses in Gao et al., The Pile, arXiv
+2101.00027 §5).
 
 Model: add-``alpha`` smoothed unigram distributions over the UNION
 vocabulary V of both corpora —

@@ -130,15 +130,6 @@ def is_datetime_code(c: Column) -> Column:
     return c.isNotNull() & c.rlike(rx.DATETIME_CODE)
 
 
-def datetime_code_year(c: Column) -> Column:
-    """Captured YYYY of a datetime code, as int (NULL when not matching).
-
-    Full-width digits normalized before the cast (Python int() accepts
-    them; the (?U) pattern can capture them)."""
-    y = F.regexp_extract(c, rx.DATETIME_CODE, 1)
-    return F.when(y != "", F.translate(y, "０１２３４５６７８９", "0123456789").try_cast("int"))
-
-
 def is_christian_era(c: Column) -> Column:
     """1-4 digit integer (regex.py:8)."""
     return c.isNotNull() & c.rlike(rx.CHRISTIAN_ERA)

@@ -11,7 +11,6 @@ reference relied on match-at-start semantics.
 # funcs.py:68-77). re.match means "-foo" / "ーx" / "なしでも" also count as
 # empty; we keep prefix semantics with ^-anchored alternatives.
 EMPTY_PATTERN = r"(?U)^(\s*$|-|ー|なし)"  # (?U): Python's \s is Unicode-aware (incl U+3000)
-EMPTY_LITERALS = ["-", "ー", "なし"]  # exact-match fast path
 
 # Any whitespace or line break anywhere in the cell (regex.py:6).
 SPACES_AND_LINE_BREAK = r"(?U)\s"
@@ -33,6 +32,14 @@ NUM_WITH_NUM = r"(?U)^(\d+?)((\s+?)(\d+?))+?"
 # number followed by a non-digit unit suffix, e.g. "1000円" (regex.py:11).
 NUMBER_STRING = r"(?U)^\d+[^\d]+$"
 
+# THE package whitespace class (not from the reference), written out
+# explicitly so every engine has byte-identical semantics: Java \s
+# (executor regex) is ASCII-only [ \t\n\x0B\f\r], but RE2 does NOT include
+# \x0B in \s and Python's \s / str.split() are Unicode-wide (NBSP,
+# ideographic space, ...). Spelling the class out removes all three
+# divergences.
+WS_CLASS = r"[ \t\n\x0B\f\r]"
+
 # Digit characters per Python str.isdigit() — includes full-width ０-９
 # (funcs.py:80-87); plain [0-9] would diverge on Japanese tables.
 ANY_DIGIT = r"[0-9０-９]"
@@ -52,12 +59,10 @@ ABBREVIATED_PREFECTURE_NAMES = [
     "愛媛", "高知", "福岡", "佐賀", "長崎", "熊本", "大分", "宮崎", "鹿児島", "沖縄",
 ]
 
-# prefecture name -> code (1..47), the RI dictionary behind rule 1-12
+# abbreviated prefecture name -> code, the RI dictionary behind rule 1-12
 # (csv_linter.py:321-369). Codes follow JIS X 0401 ordering, which is the
-# list order above.
-PREFECTURE_CODES = {name: i + 1 for i, name in enumerate(VALID_PREFECTURE_NAMES)}
-# abbreviated list aligns with VALID[1:] (北海道 has no abbreviation), so
-# 青森 -> 2, ..., 沖縄 -> 47.
+# list order of VALID_PREFECTURE_NAMES (1..47); the abbreviated list aligns
+# with VALID[1:] (北海道 has no abbreviation), so 青森 -> 2, ..., 沖縄 -> 47.
 ABBREV_TO_CODE = {name: i + 2 for i, name in enumerate(ABBREVIATED_PREFECTURE_NAMES)}
 
 # Japanese calendar eras accepted by jeraconv's J2W (the 5 modern eras).

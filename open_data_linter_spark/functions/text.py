@@ -13,13 +13,8 @@ import re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# THE package whitespace class, written out explicitly so every engine has
-# byte-identical semantics: Java \s (executor regex) is ASCII-only
-# [ \t\n\x0B\f\r], but RE2 (the DuckDB oracles) does NOT include \x0B in
-# \s and Python's \s / str.split() are Unicode-wide (NBSP, ideographic
-# space, ...). Spelling the class out removes all three divergences
-# (CLAUDE.md Java/Python \s parity note).
-WS_CLASS = r"[ \t\n\x0B\f\r]"
+from open_data_linter_spark.functions.regexes import WS_CLASS
+
 _JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
 

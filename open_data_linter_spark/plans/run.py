@@ -40,7 +40,6 @@ from open_data_linter_spark.core.model import (
     AUDIT_SCHEMA,
     KEEP_EVIDENCE,
     RUN_CACHES,
-    VIOLATION_SCHEMA,
     InvalidContent,
     LintResult,
     Rule,
@@ -65,15 +64,13 @@ class RunReport:
     re-runs its sources when consumed. ``partition_summary_df`` is the
     per-(rule, column, partition) lineage as a DataFrame (backed by a
     localCheckpoint of the fused-scan output, so re-reading it never
-    re-scans the input); ``partition_summaries`` is its collected form,
-    populated ONLY in interactive/test mode (collect_violation_rows=True)
-    — at 10^12 rows the driver must never hold per-partition width.
+    re-scans the input); it is never collected — at 10^12 rows the driver
+    must never hold per-partition width.
     """
 
     run_id: str
     results: dict[str, LintResult]
     violations: Optional[DataFrame]
-    partition_summaries: list[dict]  # per (rule_id, partition_id)
     metrics: dict[str, dict[str, float]]
     blocked: bool = False
     wall_secs: dict[str, float] = field(default_factory=dict)
@@ -267,7 +264,6 @@ class ValidationRun:
         metrics: dict[str, dict[str, float]] = {}
         wall: dict[str, float] = {}
         all_violation_dfs: list[DataFrame] = []
-        partition_summaries: list[dict] = []
 
         by_scope: dict[RuleScope, list[Rule]] = {}
         for r in self.rules:
@@ -293,7 +289,7 @@ class ValidationRun:
                           RuleScope.SHUFFLE, RuleScope.PAYLOAD):
                 for r in by_scope.get(scope, []):
                     results[r.rule_id] = LintResult.simple_error(BLOCKED_MESSAGE, is_valid=None)
-            return RunReport(self.run_id, results, None, [], metrics, blocked=True, wall_secs=wall)
+            return RunReport(self.run_id, results, None, metrics, blocked=True, wall_secs=wall)
 
         # 2-4. Everything after the gate is mutually independent, and runs
         #    in TWO phases:
@@ -380,12 +376,6 @@ class ValidationRun:
             if out.violations is not None:
                 all_violation_dfs.append(out.violations)
 
-        psum_df = row_out.get("psum_df")
-        if psum_df is not None and self.collect_violation_rows:
-            # interactive/test mode only: the per-partition width may reach
-            # the driver. The at-scale path keeps it as a DataFrame.
-            partition_summaries.extend(r.asDict() for r in psum_df.collect())
-
         violations = None
         if all_violation_dfs:
             violations = all_violation_dfs[0]
@@ -404,8 +394,8 @@ class ValidationRun:
                 wall["evidence"] = time.time() - t0
 
         report = RunReport(
-            self.run_id, results, violations, partition_summaries, metrics,
-            wall_secs=wall, partition_summary_df=psum_df,
+            self.run_id, results, violations, metrics, wall_secs=wall,
+            partition_summary_df=row_out.get("psum_df"),
         )
         self._attach_violation_cells(report)
         return report
@@ -512,10 +502,6 @@ class ValidationRun:
             F.lit(ts).cast("long").alias("ts_logical"),
         )
         return part_df.unionByName(metrics_df)
-
-
-def empty_violations(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], VIOLATION_SCHEMA)
 
 
 def sample_violations(violations: DataFrame, sample_mod: int) -> DataFrame:

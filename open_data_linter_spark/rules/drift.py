@@ -201,14 +201,6 @@ def make_drift_rule(
     )
 
 
-def freeze_baseline(df: DataFrame, column: str, bin_edges: Sequence[float] | None = None) -> dict:
-    """Compute {bin: count} from a known-good batch (baseline_hist builder)."""
-    return {
-        float(r["bin"]): int(r["count"])
-        for r in histogram(df, column, bin_edges).collect()
-    }
-
-
 def windowed_drift_scores(
     win_hist: DataFrame,
     baseline: DataFrame,

@@ -13,8 +13,8 @@ drag the threshold.
 Exactness contract: the median is the LOWER median (the element at
 position ceil(n/2) of the sorted values — an actual data element, no
 interpolation), so Spark and an independent SQL engine agree bit-for-bit
-on doubles. Scale guard: the exact path materializes the k smallest
-values into one task to pick the order statistic (TakeOrdered, k = n/2) —
+on doubles. Scale guard: the exact path merges every distinct value into
+one aggregate buffer to pick the order statistic (``percentile_disc``) —
 fine for per-batch validation fixtures, a scale-killer at 10^12 rows. The
 DEFAULT (``approx=None``) therefore probes the row count with a
 short-circuiting ``limit(MAX+1).count()`` and auto-switches to mergeable
@@ -28,27 +28,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from open_data_linter_spark.functions.text import WS_CLASS
+from open_data_linter_spark.functions.regexes import WS_CLASS
 
 MODIFIED_Z = 0.6745  # Φ^-1(0.75): scales MAD to σ for the modified z-score
 
 # auto mode (approx=None) stays exact up to this many non-null rows; the
-# exact path gathers n/2 values into one task, so the bound is what one
-# task comfortably holds (500k doubles ≈ 4 MB), not executor memory
+# exact path gathers every distinct value into one task, so the bound is
+# what one task comfortably holds (a value->count map of at most 1M
+# doubles), not executor memory
 EXACT_MEDIAN_MAX_ROWS = 1_000_000
 
 
-def _lower_median(df: DataFrame, col: str, n: int | None = None) -> float:
+def _lower_median(df: DataFrame, col: str) -> float:
     """Exact lower median: the ceil(n/2)-th smallest value (1-based).
 
-    ``n`` is the known row count (pass it to avoid a redundant count job)."""
-    if n is None:
-        n = df.count()
-    if n == 0:
+    ``percentile_disc(0.5)`` is the smallest value whose cumulative share
+    reaches one half — that same element, in one aggregate job. NULLs
+    are skipped; no rows gives NULL, which raises."""
+    m = df.agg(
+        F.expr(f"percentile_disc(0.5) WITHIN GROUP (ORDER BY `{col}`)")
+    ).first()[0]
+    if m is None:
         raise ValueError("no rows to take a median over")
-    k = (n + 1) // 2
-    row = df.select(col).orderBy(col).limit(k).agg(F.max(col)).first()
-    return float(row[0])
+    return float(m)
 
 
 def word_count(transcript_col="transcript") -> F.Column:
@@ -88,17 +90,14 @@ def robust_z_outliers(
     ``True`` forces sketches.
 
     NULL values are excluded from both the statistics and the output: a
-    NULL carries no rate signal, its absence is a completeness rule's job
-    (and Spark's nulls-first sort would otherwise silently corrupt the
-    order statistic). Raises ValueError when no non-null rows remain —
-    on BOTH paths (``percentile_approx`` over zero rows returns NULL)."""
+    NULL carries no rate signal, its absence is a completeness rule's job.
+    Raises ValueError when no non-null rows remain — on BOTH paths (both
+    percentile aggregates return NULL over zero rows)."""
     vals = df.select(
         F.col(id_col).alias("id"), F.col(value_col).alias("v")
     ).where(F.col("v").isNotNull())
-    n = None
     if approx is None:
-        n = vals.limit(EXACT_MEDIAN_MAX_ROWS + 1).count()
-        approx = n > EXACT_MEDIAN_MAX_ROWS
+        approx = vals.limit(EXACT_MEDIAN_MAX_ROWS + 1).count() > EXACT_MEDIAN_MAX_ROWS
     if approx:
         m = vals.agg(F.percentile_approx("v", 0.5, 10000)).first()[0]
         if m is None:
@@ -110,18 +109,9 @@ def robust_z_outliers(
             .first()[0]
         )
     else:
-        # the exact path reads vals 4x (count, two TakeOrdered medians,
-        # the final outlier scan) — pin it so upstream lineage (a full
-        # scan, or a mapInPandas synthesis in the fixtures) runs once
-        from open_data_linter_spark.dedup._cache import persist_scoped
-
-        vals = persist_scoped("rate.vals", vals)
-        if n is None:  # forced-exact: no auto probe ran
-            n = vals.count()
-        med = _lower_median(vals, "v", n=n)
-        # |v - med| is non-null exactly where v is: same n
+        med = _lower_median(vals, "v")
         mad = _lower_median(
-            vals.select(F.abs(F.col("v") - F.lit(med)).alias("d")), "d", n=n
+            vals.select(F.abs(F.col("v") - F.lit(med)).alias("d")), "d"
         )
     if mad == 0.0:
         raise ValueError("MAD is zero: values are majority-constant")

@@ -13,7 +13,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from open_data_linter_spark.audio.synth import (
-    clip_id_for,
     codec_registry_pdf,
     synthesize_clips,
     synthesize_reference,
@@ -69,7 +68,3 @@ def make_fixture(
         baseline_src, [("sr_hz", None), ("dur_ms", DUR_BIN_EDGES)]
     )
     return clips, ctx
-
-
-def expected_clip_ids(corrupt: dict[int, str], tag: str) -> set[str]:
-    return {clip_id_for(i) for i, t in corrupt.items() if t == tag}

@@ -1,7 +1,6 @@
 """Deterministic synthetic documents corpus with planted near-duplicates.
 
-Benchmark/scale-evidence input for the text-dedup family (the analog of
-audio/synth.synthesize_tone_clips for dedup/audio_fp.py): pure-Catalyst
+Benchmark/scale-evidence input for the text-dedup family: pure-Catalyst
 generation — every token is a seeded xxhash64 draw from a ``vocab``-sized
 word space, so the corpus is identical across runs, partitionings, and
 cluster sizes, and synthesizes at full parallelism with no Python.

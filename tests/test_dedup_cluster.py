@@ -91,32 +91,6 @@ def test_cc_string_ids_empty_pairs(spark):
     assert connected_components(df).count() == 0
 
 
-def test_audio_keepone_dedup_matches_planted_groups(spark):
-    """The keep-one composition on the PAYLOAD axis: fingerprint pairs ->
-    string-id connected components -> deduplicate. Survivors must be
-    exactly the planted group leaders plus all singletons (the engine
-    derives this from decoded audio; the expectation comes from the
-    synthesis ground truth)."""
-    from open_data_linter_spark.audio.synth import synthesize_tone_clips
-    from open_data_linter_spark.dedup.audio_fp import audio_near_duplicates
-    from open_data_linter_spark.dedup.cluster import deduplicate
-
-    clips = synthesize_tone_clips(spark, 128, 8)
-    pairs = audio_near_duplicates(clips, threshold=0.45)
-    kept = {
-        r.clip_id
-        for r in deduplicate(clips, pairs, id_col="clip_id")
-        .select("clip_id")
-        .collect()
-    }
-    # planted layout: every 8-block is {leader at pos 0, variants at pos
-    # 6 and 7 of the leader, singletons at pos 1..5}
-    expect = {
-        f"clip_{i:08d}" for i in range(128) if i % 8 not in (6, 7)
-    }
-    assert kept == expect
-
-
 def test_cc_empty_pairs(spark):
     from open_data_linter_spark.dedup.cluster import connected_components
 

@@ -87,28 +87,6 @@ def test_duplicate_intervals_flag(spark):
     assert [r["kind"] for r in out] == ["overlap"]
 
 
-def test_engine_audio_segments_are_mutually_exclusive(spark):
-    """Axis-B invariant: VAD utterance segments emitted by
-    segment_on_silence never overlap within a clip (gaps are the
-    removed silence — expected, so report_gaps=False). Sample
-    coordinates ride through timestamp_seconds (exact for ints)."""
-    from pyspark.sql import functions as F
-
-    from open_data_linter_spark.audio.synth import synthesize_gapped_clips
-    from open_data_linter_spark.multimodal.media import segment_on_silence
-
-    segs = segment_on_silence(synthesize_gapped_clips(spark, 32, 4))
-    iv = segs.select(
-        "clip_id",
-        F.timestamp_seconds("start_sample").alias("s"),
-        F.timestamp_seconds(
-            F.col("start_sample") + F.col("seg_samples")
-        ).alias("e"),
-    )
-    bad = check_interval_integrity(iv, ["clip_id"], "s", "e", report_gaps=False)
-    assert bad.count() == 0
-
-
 def test_plan_one_exchange_one_window(spark, tmp_path):
     import contextlib
     import io

@@ -83,9 +83,8 @@ def test_empty_input_raises(spark):
 
 
 def test_null_values_excluded_from_stats(spark):
-    """NULLs in the value column must not shift the order statistics
-    (Spark sorts nulls FIRST, so an unfiltered limit(k) would return a
-    wrong median) and must never be reported as outliers."""
+    """NULLs in the value column must not shift the order statistics and
+    must never be reported as outliers."""
     pdf = pd.DataFrame(
         {
             "id": [f"r{i:02d}" for i in range(20)],
@@ -171,3 +170,14 @@ def test_auto_guard_exact_below_threshold_bitwise(spark):
     auto = [tuple(r) for r in transcript_rate_outliers(sdf).collect()]
     exact = [tuple(r) for r in transcript_rate_outliers(sdf, approx=False).collect()]
     assert auto == exact and len(auto) > 0
+
+
+def test_exact_path_leaves_no_cached_frame(spark):
+    """Neither the auto nor the forced-exact path leaves a frame in the
+    session's cache once its result is collected."""
+    sdf = spark.createDataFrame(gen_clips_pdf(np.arange(256))[META])
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    for approx in (None, False):
+        assert transcript_rate_outliers(sdf, approx=approx).collect()
+        assert cache.isEmpty(), approx
