@@ -83,9 +83,9 @@ def apss_jaccard_pairs(
     dfc = exploded.groupBy("tok").agg(F.count(F.lit(1)).alias("tdf"))
     # explicit fixed-count width under the sort-fold: the (id, tdf, tok)
     # rows are tiny, so AQE byte-coalescing would run the per-doc
-    # array_sort(collect_list) on ONE task (the dedup/embedding.py trap);
-    # collect_list partials reduce nothing, so the pinned repartition
-    # shuffles the same bytes the groupBy would have
+    # array_sort(collect_list) on ONE task; collect_list partials reduce
+    # nothing, so the pinned repartition shuffles the same bytes the
+    # groupBy would have
     par = df.sparkSession.sparkContext.defaultParallelism
     t_lit = F.lit(float(threshold))
 

@@ -1,6 +1,6 @@
 """Near-duplicate clustering: pair lists → connected components → keep-one.
 
-Pair producers (minhash/simhash/jaccard/embedding) emit EDGES; a dedup
+Pair producers (minhash/simhash/jaccard) emit EDGES; a dedup
 pipeline needs the transitive clusters (A~B, B~C ⇒ {A,B,C} is one group)
 and a canonical survivor per group. ``connected_components`` is min-label
 propagation expressed as DataFrame joins — the standard Spark shape for

@@ -224,10 +224,10 @@ def remove_duplicate_spans(
     # explicit fixed-count hash partitioning before the two heaviest
     # narrow stages (the interval-merge fold here, the span-key hashing
     # below): their input rows are tiny, so AQE's byte-based coalescing
-    # would funnel them to ONE task (the dedup/embedding.py trap) — a
-    # user-specified repartition pins the width. No extra shuffle bytes:
-    # collect_list's partial agg reduces nothing, so the groupBy would
-    # have shuffled every cov row anyway.
+    # would funnel them to ONE task — a user-specified repartition pins
+    # the width. No extra shuffle bytes: collect_list's partial agg
+    # reduces nothing, so the groupBy would have shuffled every cov row
+    # anyway.
     par = df.sparkSession.sparkContext.defaultParallelism
     runs = cov.repartition(par, "id").groupBy("id").agg(
         _covered_runs(F.collect_list(F.struct("cs", "ce"))).alias("runs")

@@ -93,8 +93,7 @@ def token_divergence(
     )
     a = F.lit(float(alpha))
     # u feeds two consumers (totals + the per-word projection) — pin it
-    # so the two count shuffles run once; it is vocabulary-sized, the
-    # same bound as dsir's count table
+    # so the two count shuffles run once; it is vocabulary-sized
     from open_data_linter_spark.dedup._cache import persist_scoped
 
     u = persist_scoped(f"divergence:{group_col}", u)

@@ -51,7 +51,7 @@ def _toks(c):
 
 def _bigrams(toks):
     # shared adjacency contract — functions/text.adjacent_pairs is THE
-    # single bigram producer (dsir.py builds on the same one)
+    # single bigram producer
     from open_data_linter_spark.functions.text import adjacent_pairs
 
     return adjacent_pairs(toks)

@@ -37,10 +37,10 @@ BROADCASTS — scoring adds no shuffle beyond the per-doc re-aggregation.
 ``buckets=None`` keeps raw string features for oracle-exact parity.
 
 Tokenize goes through ``functions/text.ws_tokens`` (the repo-wide
-contract). Unigrams only — the fastText default; DSIR (functions/dsir.py)
-is the unigram+bigram IMPORTANCE model (target vs raw likelihood ratio),
-this is the DISCRIMINATIVE pos-vs-neg gate; the two select differently
-and real pipelines run both.
+contract). Unigrams only — the fastText default. This is the
+DISCRIMINATIVE pos-vs-neg gate, not an importance model (target vs raw
+likelihood ratio); the two select differently and real pipelines run
+both.
 
 The reference (volare-all/open-data-linter) has no learned scorers; this
 extends the engine per the training-data-pipeline mandate. Its closest

@@ -189,10 +189,9 @@ def adjacent_pairs(toks: Column) -> Column:
     """``array<struct<w1,w2>>`` — one entry per adjacent token pair, no
     fallback (a <2-token array yields ``[]``). THE single implementation
     of the bigram-adjacency contract: functions/lm.py (bigram LM counts)
-    and functions/dsir.py (feature bags) both build on this. Distinct
-    from ``positional_shingle_structs``, whose short-doc whole-doc
-    fallback is a shingle-COVER property that bag semantics must not
-    inherit."""
+    builds on this. Distinct from ``positional_shingle_structs``, whose
+    short-doc whole-doc fallback is a shingle-COVER property that bag
+    semantics must not inherit."""
     n = F.size(toks)
     # CaseWhen evaluates lazily per-row, so the negative slice length in
     # the n<2 branch is never constructed under ANSI mode

@@ -24,7 +24,7 @@ Semantics:
   order-insensitive) but engine-specific: the oracle pins engine
   values while independently recomputing EXACT distinct counts and
   enforcing a relative-error invariant, following the
-  column_profile_hll / knn_ivf convention.
+  column_profile_hll convention.
 
 Plan shape: ONE partial-aggregated input Exchange builds the bucket
 sketches (sketch merge is the map-side combine); the rollup is an

@@ -58,7 +58,12 @@ DECODE_RESULT_SCHEMA = T.StructType(
 
 def _decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     # imports inside the worker function keep the closure light
-    from open_data_linter_spark.audio.codecs import decode_clip, pcm_to_float32, snr_db
+    from open_data_linter_spark.audio.codecs import (
+        decode_clip,
+        pcm_to_float32,
+        sniff_codec,
+        snr_db,
+    )
 
     out = {k: [] for k in [f.name for f in DECODE_RESULT_SCHEMA.fields]}
     has_ref_cols = "pcm_ref" in pdf.columns
@@ -76,8 +81,6 @@ def _decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
                 ok, sniffed, sr_dec, n_frames = True, codec, int(sr_dec_i), len(pcm)
             except ValueError as e:
                 err = str(e)
-                from open_data_linter_spark.audio.codecs import sniff_codec
-
                 sniffed = sniff_codec(bytes(data))
         if has_ref_cols and row.pcm_ref is not None:
             has_ref = True

@@ -109,9 +109,14 @@ def robust_z_outliers(
             .first()[0]
         )
     else:
-        med = _lower_median(vals, "v")
+        # pin the values both medians read, so the input lineage runs once
+        # for the two of them. A local checkpoint is no session cache
+        # entry. The returned frame reads the input itself: its plan keeps
+        # the input's scan and aggregates in view.
+        pinned = vals.localCheckpoint(eager=True)
+        med = _lower_median(pinned, "v")
         mad = _lower_median(
-            vals.select(F.abs(F.col("v") - F.lit(med)).alias("d")), "d"
+            pinned.select(F.abs(F.col("v") - F.lit(med)).alias("d")), "d"
         )
     if mad == 0.0:
         raise ValueError("MAD is zero: values are majority-constant")

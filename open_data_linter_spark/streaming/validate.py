@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from open_data_linter_spark.core.model import Rule
-from open_data_linter_spark.plans.run import ValidationRun
+from open_data_linter_spark.plans.run import ValidationRun, sample_violations
 
 CLIP_SCHEMA = T.StructType(
     [
@@ -91,8 +91,6 @@ def validate_stream(
             .parquet(audit_path)
         )
         if violations_path is not None and report.violations is not None:
-            from open_data_linter_spark.plans.run import sample_violations
-
             (
                 sample_violations(report.violations, violation_sample_mod)
                 .withColumn("batch_id", F.lit(batch_id))

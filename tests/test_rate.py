@@ -181,3 +181,39 @@ def test_exact_path_leaves_no_cached_frame(spark):
     for approx in (None, False):
         assert transcript_rate_outliers(sdf, approx=approx).collect()
         assert cache.isEmpty(), approx
+
+
+def test_exact_path_reads_its_input_twice(spark):
+    """The exact path pins the values its two lower medians read, so the
+    input lineage runs once for both medians and once more for the
+    returned rows (whose plan must keep the input's scan in view). A
+    counting Python UDF as the value column shows it: each read evaluates
+    it twice per row (the NULL filter and the projection), the auto
+    path's size probe once. Unpinned, each median is one more read."""
+    from pyspark.sql import functions as F
+
+    n = 2000
+    rng = np.random.default_rng(5)
+    v = rng.normal(10.0, 1.0, n)
+    v[::97] += 25.0  # planted outliers
+    values = [float(x) for x in v]
+    plain = spark.createDataFrame(
+        pd.DataFrame({"id": np.arange(n), "v": v}), "id long, v double"
+    )
+    want = [tuple(r) for r in robust_z_outliers(plain, "v", "id", approx=False).collect()]
+    assert len(want) >= n // 97
+
+    for approx, max_evals in ((None, 5), (False, 4)):
+        acc = spark.sparkContext.accumulator(0)
+
+        def counted(i, acc=acc):
+            acc.add(1)
+            return values[i]
+
+        df = spark.range(n, numPartitions=4).select(
+            "id", F.udf(counted, "double")("id").alias("v")
+        )
+        got = [tuple(r) for r in robust_z_outliers(df, "v", "id", approx=approx).collect()]
+        assert got == want, approx
+        # the few outlier rows past the z filter are evaluated again
+        assert acc.value <= max_evals * n + 4 * len(want), (approx, acc.value / n)
