@@ -1,7 +1,7 @@
 """Scoped persist() with one-generation retention.
 
-The dedup/ANN builders persist intermediates (partition-spread sources,
-hashed shingle sets, band rows) that the returned LAZY plans consume, so
+The ``functions/`` text operators and ``dedup/spans.py`` persist
+intermediates (partition-spread sources, per-row statistics) that the returned LAZY plans consume, so
 the builder can't unpersist before returning and the caller never holds a
 handle. Spark's CacheManager keeps strong references, so bare persist()
 calls would accumulate forever in a long-lived session (round-3 code
@@ -46,8 +46,8 @@ def spread_and_pin(scope: str, df: DataFrame) -> DataFrame:
     The persist pins the exchange boundary BELOW later projections:
     Catalyst collapses a column-independent projection under a round-robin
     exchange, which would run the expensive expression on the narrow
-    pre-shuffle side (the round-2 single-partition trap, 80-90% of the
-    minhash/jaccard wall). Persisting an already-wide input is intentional
+    pre-shuffle side (the single-partition trap: one core runs the
+    whole per-row pass). Persisting an already-wide input is intentional
     — every caller reuses the frame from multiple consumers."""
     par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < par:
@@ -71,8 +71,8 @@ def nudge_context_cleaner(spark) -> None:
     up. Cleanup completes asynchronously on the cleaner thread, but
     promptly — instead of whenever the driver happens to GC.
 
-    Iterative operators that re-checkpoint per round (dedup/cluster.py,
-    functions/bpe.py, the curation CLI funnel) call this after each
+    Iterative operators that re-checkpoint per round (functions/bpe.py)
+    call this after each
     generation handoff; without it every round's full materialized
     blocks accumulate for the life of the job (code-review finding).
     """

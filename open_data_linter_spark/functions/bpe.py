@@ -33,7 +33,7 @@ After the word count, training runs on ONE of two paths:
   discipline: the evolving word table feeds two consumers per round, so a
   lazy persist doubles the plan tree per round and Catalyst re-analysis
   explodes — ``localCheckpoint`` per round with materialize-then-release
-  generation handoff, exactly the dedup/cluster.py lesson.
+  generation handoff, the standard iterative-operator lesson.
 
 Both paths are exactly equivalent (same weighted pair statistics, same
 count-desc/left-asc/right-asc total order, same greedy merge semantics;
@@ -248,7 +248,7 @@ def bpe_train(
         ),
     )
     # one generation per round; materialize-then-release handoff so round
-    # r+1 never recomputes rounds 1..r (dedup/cluster.py lineage lesson)
+    # r+1 never recomputes rounds 1..r (lineage stays one round deep)
     cur = words.localCheckpoint(eager=True)
     merges: list[tuple[int, str, str, int]] = []
     try:

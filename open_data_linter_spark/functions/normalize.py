@@ -18,7 +18,7 @@ contract, applied in a fixed order:
    class ``[ \\t\\x0B\\f]`` become one space, then leading/trailing
    spaces are trimmed. The class is spelled out, never ``\\s`` — Java
    ``\\s`` and RE2/Python disagree (see functions/text.ws_tokens);
-   newlines are structure and survive (dedup/lines.py consumes them).
+   newlines are structure and survive (line-level operators split on them).
 
 Steps 2-3 are pure Catalyst ``regexp_replace`` (whole-stage codegen).
 NFC is the one genuinely-inexpressible step: Spark has no normalization

@@ -5,9 +5,8 @@ REPEATED material inside the document itself (machine-generated listings,
 keyword stuffing, navigation loops): Rae et al., "Scaling Language Models:
 Methods, Analysis & Insights from Training Gopher" (arXiv 2112.11446,
 table A1) gate on the fraction of a document made of duplicated n-grams and
-on the share taken by the single most frequent n-gram. ``dedup/spans.py``
-measures CROSS-document span duplication; this module measures the
-WITHIN-document analog, per n-gram size:
+on the share taken by the single most frequent n-gram. This module
+measures that WITHIN-document repetition, per n-gram size:
 
 - ``n_grams``        — total n-gram positions (occurrence stream length)
 - ``distinct_grams`` — distinct n-grams in the document
@@ -19,9 +18,9 @@ Scale design: the operator is embarrassingly parallel over documents —
 nothing is exploded or shuffled, which is the plan you want when the
 corpus is 100 TB and the per-doc state is a few kilobytes. Round 6: the
 per-(doc, n) counters are computed in ONE Arrow-vectorized numpy batch op
-over the per-TOKEN xxhash64 stream (the dedup/simhash.py pattern, guide
-§4.2) — the former shape built three gram-string arrays and folded each
-with ``F.aggregate``, and higher-order-function lambdas evaluate on the
+over the per-TOKEN xxhash64 stream (guide §4.2) — the former shape
+built three gram-string arrays and folded each with ``F.aggregate``, and
+higher-order-function lambdas evaluate on the
 interpreted expression path per element, which made gram construction +
 fold the whole cost of the operator (13.5s -> ~3s at sf1.0). N-gram
 equality is decided on the n-tuple of token hashes (tokens never contain
@@ -30,7 +29,7 @@ tuple): identical equivalence classes, identical counters.
 
 Counting on 64-bit hashes is identical to counting on the gram strings
 up to xxhash64 collisions; the driver oracle recomputes on the raw strings
-in DuckDB and matches (same argument as dedup/spans.py ``hash_grams``).
+in DuckDB and matches.
 
 The reference (volare-all/open-data-linter) has no intra-doc repetition
 checks; this extends the engine per the training-data-pipeline mandate.
@@ -139,7 +138,7 @@ def repetition_stats(
     (doc_id, n, n_grams, distinct_grams, dup_position_rate, top_gram_rate),
     rates rounded to 6 places. Tokenization and the short-doc whole-text
     fallback follow ``functions.text.positional_shingles`` exactly, so the
-    numbers compose with dedup/spans.py and the shingle-based dedup family.
+    numbers compose with the other shingle-based text operators.
 
     Input contract: ``id_col`` is unique per document.
     """
@@ -150,7 +149,7 @@ def repetition_stats(
     # scan is ONE partition and Catalyst collapses column-independent
     # projections below a bare repartition, so without the pinned
     # boundary the whole per-row pass serializes onto one core
-    # (22.5s -> ~2s at sf0.1; the round-2 minhash trap)
+    # (22.5s -> ~2s at sf0.1)
     from open_data_linter_spark.dedup._cache import spread_and_pin
 
     src = spread_and_pin(

@@ -93,9 +93,8 @@ def robust_z_outliers(
     NULL carries no rate signal, its absence is a completeness rule's job.
     Raises ValueError when no non-null rows remain — on BOTH paths (both
     percentile aggregates return NULL over zero rows)."""
-    vals = df.select(
-        F.col(id_col).alias("id"), F.col(value_col).alias("v")
-    ).where(F.col("v").isNotNull())
+    proj = df.select(F.col(id_col).alias("id"), F.col(value_col).alias("v"))
+    vals = proj.where(F.col("v").isNotNull())
     if approx is None:
         approx = vals.limit(EXACT_MEDIAN_MAX_ROWS + 1).count() > EXACT_MEDIAN_MAX_ROWS
     if approx:
@@ -109,14 +108,15 @@ def robust_z_outliers(
             .first()[0]
         )
     else:
-        # pin the values both medians read, so the input lineage runs once
-        # for the two of them. A local checkpoint is no session cache
-        # entry. The returned frame reads the input itself: its plan keeps
-        # the input's scan and aggregates in view.
-        pinned = vals.localCheckpoint(eager=True)
-        med = _lower_median(pinned, "v")
+        # pin the values both medians and the returned rows read, so the
+        # input lineage runs once per call (a local checkpoint is no
+        # session cache entry). Pin the projection, not ``vals``: Catalyst
+        # pushes the NULL filter under the projection, which would
+        # evaluate the value expression twice per row.
+        vals = proj.localCheckpoint(eager=True).where(F.col("v").isNotNull())
+        med = _lower_median(vals, "v")
         mad = _lower_median(
-            pinned.select(F.abs(F.col("v") - F.lit(med)).alias("d")), "d"
+            vals.select(F.abs(F.col("v") - F.lit(med)).alias("d")), "d"
         )
     if mad == 0.0:
         raise ValueError("MAD is zero: values are majority-constant")

@@ -4,7 +4,7 @@ The reference linter's unit of work is a loose FILE (bytes + filename,
 open_data_linter.py:11-21); the engine's is a row of the clip table. This
 source closes that gap for the audio axis: point it at a directory of raw
 WAV / µ-law / A-law containers and get back the exact table shape every
-rule, dedup operator, and index in the engine consumes —
+rule in the engine consumes —
 ``(clip_id, bytes, sr_hz, dur_ms, codec, transcript)``.
 
 Shape: ``binaryFile`` scan (distributed, whole-file rows, Catalyst prunes

@@ -113,10 +113,12 @@ def test_mask_profile_one_input_sized_shuffle(events_parquet):
     assert "Exchange SinglePartition" not in plan, plan
 
 
-def test_volume_counts_collapse_before_shuffle(events_parquet):
+def test_volume_counts_collapse_before_shuffle(events_parquet, monkeypatch):
     """volume_anomalies' only scan of the input is the per-bucket count,
     and it must partially aggregate map-side — the z-scoring runs on the
-    O(#buckets) aggregate."""
+    O(#buckets) aggregate. The exact path pins that aggregate once, so the
+    scan is checked in the pinned plan, and the returned rows must read
+    the pin rather than scan the input again."""
     from open_data_linter_spark.rules.volume import volume_anomalies
 
     # day d receives 2d+1 rows (varying counts, MAD > 0)
@@ -125,8 +127,20 @@ def test_volume_counts_collapse_before_shuffle(events_parquet):
             F.lit(1_700_000_000) + F.floor(F.sqrt("s")).cast("long") * 86400
         ).alias("ts")
     )
+    pinned = []
+    local_checkpoint = type(varied).localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        pinned.append(explain_str(self))
+        return local_checkpoint(self, *args, **kwargs)
+
+    # the class of a Spark 4 frame is the classic DataFrame, not
+    # pyspark.sql.DataFrame, so patch the class the frame has
+    monkeypatch.setattr(type(varied), "localCheckpoint", recording)
     plan = explain_str(volume_anomalies(varied, "ts"))
-    assert _partial_agg_before_first_exchange(plan), plan
+    assert len(pinned) == 1, pinned
+    assert _partial_agg_before_first_exchange(pinned[0]), pinned[0]
+    assert "Scan parquet" not in plan and "FileScan" not in plan, plan
 
 
 def test_benford_no_expand_and_partial_agg(events_parquet):
