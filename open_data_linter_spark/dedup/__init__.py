@@ -1,2 +1,2 @@
-"""Duplicate-span statistics and removal (``spans.py``) and the scoped
-persist helpers it and the ``functions/`` text operators share."""
+"""The scoped persist helpers (``_cache.py``) that ``functions/pii.py``
+uses."""

@@ -1,11 +1,10 @@
 """Scoped persist() with one-generation retention.
 
-The ``functions/`` text operators and ``dedup/spans.py`` persist
-intermediates (partition-spread sources, per-row statistics) that the returned LAZY plans consume, so
-the builder can't unpersist before returning and the caller never holds a
-handle. Spark's CacheManager keeps strong references, so bare persist()
-calls would accumulate forever in a long-lived session (round-3 code
-review finding).
+``functions/pii.py`` persists an intermediate (a partition-spread source)
+that the returned LAZY plan consumes, so the builder can't unpersist
+before returning and the caller never holds a handle. Spark's
+CacheManager keeps strong references, so bare persist() calls would
+accumulate forever in a long-lived session (round-3 code review finding).
 
 ``persist_scoped(scope, df)`` keeps exactly ONE generation per call-site
 scope: persisting a new DataFrame under a scope first unpersists the
@@ -53,36 +52,6 @@ def spread_and_pin(scope: str, df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < par:
         df = df.repartition(par)
     return persist_scoped(scope, df)
-
-
-def nudge_context_cleaner(spark) -> None:
-    """Prompt release of dropped ``localCheckpoint`` generations.
-
-    ``DataFrame.unpersist()`` does NOT free localCheckpoint blocks: they
-    belong to the internal checkpointed RDD, which is not registered in
-    the CacheManager (verified live — the persistent-RDD set is
-    unchanged after ``unpersist(blocking=True)``). The public-API
-    release path is Spark's ContextCleaner, which tracks RDDs by WEAK
-    reference and unpersists them when the JVM object is garbage
-    collected. So: the caller drops every Python reference to the old
-    generation, then calls this — a Python ``gc.collect()`` flushes the
-    py4j proxies (releasing the JVM-side Dataset/RDD refs) and a JVM
-    ``System.gc()`` lets ContextCleaner's reference queue pick the RDD
-    up. Cleanup completes asynchronously on the cleaner thread, but
-    promptly — instead of whenever the driver happens to GC.
-
-    Iterative operators that re-checkpoint per round (functions/bpe.py)
-    call this after each
-    generation handoff; without it every round's full materialized
-    blocks accumulate for the life of the job (code-review finding).
-    """
-    import gc
-
-    gc.collect()
-    try:
-        spark.sparkContext._jvm.System.gc()  # noqa: SLF001
-    except Exception:
-        pass  # a dying session just means nothing left to release
 
 
 def clear_scoped(blocking: bool = False) -> int:

@@ -180,28 +180,8 @@ def shingles(c: Column, k: int = 3) -> Column:
     """Word k-gram shingle array (distinct), for Jaccard/MinHash.
 
     Defined over ``positional_shingles`` so the tokenize/fallback contract
-    has exactly one implementation (dedup/spans.py depends on the two
-    staying in lockstep)."""
+    has exactly one implementation."""
     return F.array_distinct(positional_shingles(c, k))
-
-
-def adjacent_pairs(toks: Column) -> Column:
-    """``array<struct<w1,w2>>`` — one entry per adjacent token pair, no
-    fallback (a <2-token array yields ``[]``). THE single implementation
-    of the bigram-adjacency contract: functions/lm.py (bigram LM counts)
-    builds on this. Distinct from ``positional_shingle_structs``, whose
-    short-doc whole-doc fallback is a shingle-COVER property that bag
-    semantics must not inherit."""
-    n = F.size(toks)
-    # CaseWhen evaluates lazily per-row, so the negative slice length in
-    # the n<2 branch is never constructed under ANSI mode
-    return F.when(
-        n >= 2,
-        F.arrays_zip(
-            F.slice(toks, 1, n - 1).alias("w1"),
-            F.slice(toks, 2, n - 1).alias("w2"),
-        ),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
 
 
 def positional_shingle_structs(toks: Column, k: int) -> Column:
@@ -209,8 +189,9 @@ def positional_shingle_structs(toks: Column, k: int) -> Column:
     occurrence with its 0-based token start. THE single implementation of
     the gram/fallback contract: docs shorter than k tokens collapse to one
     whole-doc gram at start 0; empty token arrays yield ``[]``.
-    ``positional_shingles`` and ``dedup/spans.py`` both build on this so
-    the stats and removal operators can never drift apart."""
+    ``positional_shingles`` (and through it ``shingles``) builds on this
+    so the distinct and per-occurrence gram streams can never drift
+    apart."""
     n = F.size(toks)
     # Round 6 (optimization): k whole-array slices zipped once per doc,
     # instead of one per-position ``F.slice(toks, i+1, k)`` inside the
@@ -244,8 +225,8 @@ def positional_shingles(c: Column, k: int = 3) -> Column:
     """Word k-gram array WITHOUT dedup — one entry per occurrence position.
 
     Same tokenize/fallback contract as ``shingles`` (short docs collapse to
-    one whole-doc gram), but repeated spans stay repeated: this is the
-    occurrence stream that span-level statistics (dedup/spans.py) count."""
+    one whole-doc gram), but repeated spans stay repeated: one entry per
+    occurrence, for statistics that count occurrences."""
     return F.transform(
         positional_shingle_structs(ws_tokens(c), k), lambda x: x["gram"]
     )

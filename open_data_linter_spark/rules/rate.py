@@ -98,6 +98,11 @@ def robust_z_outliers(
     if approx is None:
         approx = vals.limit(EXACT_MEDIAN_MAX_ROWS + 1).count() > EXACT_MEDIAN_MAX_ROWS
     if approx:
+        # read the projection without the NULL filter: Catalyst pushes
+        # the filter under the projection, which evaluates the value
+        # expression twice per row. Both sketches skip NULLs, and a NULL
+        # value gives a NULL z, which the threshold filter drops.
+        vals = proj
         m = vals.agg(F.percentile_approx("v", 0.5, 10000)).first()[0]
         if m is None:
             raise ValueError("no rows to take a median over")

@@ -132,23 +132,3 @@ def test_windowed_drift_broadcasts_grid_and_baseline(spark):
     # would bottleneck on #bins); joins keyed by (win, bin) may shuffle —
     # they scale with #windows, which is the intended partitioning axis
     assert "BroadcastHashJoin" in plan
-
-
-def test_span_removal_plan_no_pair_expansion(spark, tmp_path_factory):
-    """remove_duplicate_spans must stay linear: equi-joins only (no
-    cartesian / broadcast-nested-loop anywhere in the plan) and the parquet
-    scan reads only the id + text columns even when the table is wide."""
-    from open_data_linter_spark.dedup.spans import remove_duplicate_spans
-
-    path = str(tmp_path_factory.mktemp("spanrm") / "docs")
-    rows = [(i, f"alpha beta w{i} gamma delta", "en", "src", 5) for i in range(32)]
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.parquet(path)
-    out = remove_duplicate_spans(spark.read.parquet(path))
-    plan = explain_str(out)
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    for ln in plan.splitlines():
-        if "ReadSchema" in ln:
-            assert "lang" not in ln and "source" not in ln, ln
