@@ -17,7 +17,7 @@ contract, applied in a fixed order:
 3. **Whitespace collapse** (optional, default on): runs of the EXPLICIT
    class ``[ \\t\\x0B\\f]`` become one space, then leading/trailing
    spaces are trimmed. The class is spelled out, never ``\\s`` — Java
-   ``\\s`` and RE2/Python disagree (see functions/text.ws_tokens);
+   ``\\s`` and RE2/Python disagree (see functions/regexes.WS_CLASS);
    newlines are structure and survive (line-level operators split on them).
 
 Steps 2-3 are pure Catalyst ``regexp_replace`` (whole-stage codegen).

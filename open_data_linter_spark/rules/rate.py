@@ -54,8 +54,9 @@ def _lower_median(df: DataFrame, col: str) -> float:
 
 
 def word_count(transcript_col="transcript") -> F.Column:
-    """Token count under the package tokenize contract (Java ``\\s+``
-    split with EMPTY TOKENS DROPPED — functions/text.java_ws_tokens twin).
+    """Token count under the package tokenize contract (split on runs of
+    functions/regexes.WS_CLASS with EMPTY TOKENS DROPPED; the Python twin
+    is ``_py_expected`` in tests/test_rate.py).
     ``array_remove(..., '')`` is what drops the empties a leading/trailing
     non-space whitespace edge produces (F.trim strips ASCII spaces only)."""
     return F.size(
@@ -126,15 +127,16 @@ def robust_z_outliers(
     if mad == 0.0:
         raise ValueError("MAD is zero: values are majority-constant")
     z = F.lit(MODIFIED_Z) * (F.col("v") - F.lit(med)) / F.lit(mad)
-    return (
-        vals.select(
-            F.col("id").alias(id_col),
-            F.round(F.col("v"), 6).alias(value_col),
-            F.round(z, 6).alias("z"),
-        )
-        .where(F.abs(F.col("z")) > z_threshold)
-        .orderBy(id_col)
-    )
+    out = vals.select(
+        F.col("id").alias(id_col),
+        F.round(F.col("v"), 6).alias(value_col),
+        F.round(z, 6).alias("z"),
+    ).where(F.abs(F.col("z")) > z_threshold)
+    if approx:
+        # the global sort's range-partition sample job would read the
+        # unpinned input once more; outlier rows are sparse, so pin them
+        out = out.localCheckpoint(eager=True)
+    return out.orderBy(id_col)
 
 
 def transcript_rate_outliers(

@@ -61,7 +61,7 @@ def get_spark(
         # across the run's many actions — worker spin-up is a per-action
         # core-count-independent cost otherwise (BENCH/BASELINE.md floor)
         .config("spark.python.worker.reuse", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "4g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
